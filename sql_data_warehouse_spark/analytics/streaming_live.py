@@ -46,7 +46,7 @@ from ..operators import dedup, kmeans
 from ..sources import load_table
 from ..streaming import jobs
 from .registry import query
-from ..tmputil import ephemeral_dir, scratch_dir
+from ..tmputil import ephemeral_dir, link_or_copy, scratch_dir
 from .xengine import MICRO_SUM_SQL
 
 _N_SOURCE_FILES = 4
@@ -1123,10 +1123,11 @@ def _flushed_landing_zone(spark: SparkSession, sf_dir: str) -> str:
         # one synthetic flush row), then append the flush row as its
         # own part file: one tiny agg + one 1-row write instead of a
         # second full-corpus write. Same rows, same schema, same
-        # single-batch drain.
+        # single-batch drain. (Copied instead where the two scratch
+        # dirs cannot share an inode.)
         src = _landing_zone(spark, sf_dir)
         for f in _glob.glob(f"{src}/*.parquet"):
-            _os.link(f, _os.path.join(path, _os.path.basename(f)))
+            link_or_copy(f, _os.path.join(path, _os.path.basename(f)))
         ev = spark.read.parquet(path)
         flush = ev.agg(F.max("ts").alias("m")).select(
             F.lit(10**12).cast("long").alias("event_id"),

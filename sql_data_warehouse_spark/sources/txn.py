@@ -19,9 +19,11 @@ shape Delta Lake / Iceberg use, reduced to what the warehouse needs:
 - **Time travel.**  Old manifests and their files are retained until
   ``vacuum``; ``read(version=N)`` reproduces any historical snapshot.
 - **File-level stats → pruned MERGE.**  Each commit records per-file
-  row counts and min/max for chosen stat columns (one Spark pass over
-  the *new* files only, grouped by ``input_file_name`` — the footer
-  stats Delta gets from the writer).  ``merge`` uses the key-column
+  row counts and min/max for chosen stat columns, read from the new
+  files' parquet footers for signed-integer columns (driver-side, no
+  Spark job — the footer stats Delta gets from the writer) and from
+  one Spark aggregation over the *new* files only, grouped by
+  ``input_file_name``, for any other type.  ``merge`` uses the key-column
   stats to split the snapshot into touched / untouched files and
   rewrites only the touched ones; untouched files are carried into
   the new manifest by reference.  At 100 TB with a 0.1 % update batch
@@ -30,7 +32,10 @@ shape Delta Lake / Iceberg use, reduced to what the warehouse needs:
 
 Scale notes: listing is O(versions) manifest reads, never a recursive
 object-store listing; commits are O(1) metadata; the only data I/O is
-the new files themselves plus (for merge) the touched subset.  All
+the new files themselves plus (for merge) the touched subset.  Reads
+pass Spark the schema the listed files' footers share, so a snapshot
+read plans without a schema-inference job (files with differing
+footers, after a schema-evolving merge, are still merged by Spark).  All
 row-level work stays in Spark DataFrame ops — the manifest layer is
 driver-side metadata measured in kilobytes.
 """
@@ -47,6 +52,8 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from . import footers
 
 _MANIFEST_DIR = "_txn"
 _DATA_DIR = "data"
@@ -154,63 +161,24 @@ class TxnTable:
                      stat_cols: tuple[str, ...] = ()) -> list[FileEntry]:
         """Write df as immutable parquet files; return entries+stats.
 
-        Stats come from one Spark aggregation over the just-written
-        files grouped by ``input_file_name()`` — scans only the new
-        data, runs distributed, and collects kilobytes to the driver.
-        With no ``stat_cols`` only row counts are needed, and those
-        come straight from the parquet footers (driver-side metadata
-        reads — no Spark job at all; the footer row count is exact by
-        the format spec, unlike min/max stats, which can be truncated
-        for string types and so stay on the Spark-aggregation path).
+        Row counts and min/max of signed-integer ``stat_cols`` come
+        from the new files' parquet footers: driver-side metadata
+        reads, no Spark job (the footer row count is exact by the
+        format spec, and so are integer min/max stats). Any other stat
+        column (string stats may be truncated; dates and timestamps go
+        through Spark's rebasing), or a footer without stats, takes one
+        Spark aggregation over the just-written files grouped by
+        ``input_file_name()`` instead, which scans only the new data
+        and collects kilobytes to the driver. Both give the same
+        entries.
         """
         commit_dir = os.path.join(_DATA_DIR, uuid.uuid4().hex)
         abs_dir = os.path.join(self.root, commit_dir)
         df.write.mode("errorifexists").parquet(abs_dir)
-
-        if not stat_cols:
-            import pyarrow.parquet as _pq
-
-            entries = []
-            for name in sorted(os.listdir(abs_dir)):
-                if not name.endswith(".parquet"):
-                    continue
-                n_rows = _pq.ParquetFile(
-                    os.path.join(abs_dir, name)).metadata.num_rows
-                entries.append(
-                    FileEntry(os.path.join(commit_dir, name), n_rows, {}))
-            if any(e.rows for e in entries):
-                entries = [e for e in entries if e.rows]
-            # all-empty: keep the part files so the snapshot still
-            # carries the schema (same contract as the Spark path)
-            return entries
-
-        written = df.sparkSession.read.parquet(abs_dir)
-        aggs = [F.count(F.lit(1)).alias("_rows")]
-        for c in stat_cols:
-            aggs.append(F.min(c).alias(f"_min_{c}"))
-            aggs.append(F.max(c).alias(f"_max_{c}"))
-        per_file = (
-            written.groupBy(F.input_file_name().alias("_file"))
-            .agg(*aggs).collect()
-        )
-        entries = []
-        for r in per_file:
-            rel = os.path.join(
-                commit_dir, os.path.basename(r["_file"].split("://")[-1]))
-            stats = {
-                c: {"min": _json_safe(r[f"_min_{c}"]),
-                    "max": _json_safe(r[f"_max_{c}"])}
-                for c in stat_cols
-            }
-            entries.append(FileEntry(rel, r["_rows"], stats))
-        if not entries:
-            # zero-row commit: keep the (empty) part files so the
-            # snapshot still carries the schema
-            for name in sorted(os.listdir(abs_dir)):
-                if name.endswith(".parquet"):
-                    entries.append(
-                        FileEntry(os.path.join(commit_dir, name), 0, {}))
-        return entries
+        per_file = _footer_file_stats(abs_dir, stat_cols)
+        if per_file is None:
+            per_file = _spark_file_stats(df.sparkSession, abs_dir, stat_cols)
+        return _manifest_entries(commit_dir, abs_dir, per_file)
 
     def overwrite(self, df: DataFrame,
                   stat_cols: tuple[str, ...] = ()) -> int:
@@ -229,6 +197,14 @@ class TxnTable:
 
     # -------------------------------------------------------------- reads
 
+    def _read_files(self, spark: SparkSession, files: list[FileEntry],
+                    merge_schema: bool = False) -> DataFrame:
+        """Read data files under the schema their footers share; when
+        they differ, Spark infers it (merged across files if asked)."""
+        return footers.read_parquet(
+            spark, *[os.path.join(self.root, f.path) for f in files],
+            merge_schema=merge_schema)
+
     def read(self, spark: SparkSession, version: int | None = None,
              prune: tuple[str, Any, Any] | None = None) -> DataFrame:
         """Snapshot read. ``prune=(col, lo, hi)`` skips files whose
@@ -244,14 +220,11 @@ class TxnTable:
         if not files:
             # preserve schema from an unpruned read of file 0
             all_files = self._files(v)
-            empty = spark.read.parquet(
-                os.path.join(self.root, all_files[0].path))
-            return empty.limit(0)
+            return self._read_files(spark, all_files[:1]).limit(0)
         # mergeSchema: snapshots may mix files written before/after a
         # schema-evolving merge (cost: one footer read per listed
         # file — bounded by the manifest, no directory listing)
-        return spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, f.path) for f in files])
+        return self._read_files(spark, files, merge_schema=True)
 
     def version_asof(self, ts: float) -> int:
         """Resolve ``AS OF TIMESTAMP`` semantics: the newest version
@@ -302,8 +275,7 @@ class TxnTable:
                 untouched.append(f)
 
         if touched:
-            tdf = spark.read.parquet(
-                *[os.path.join(self.root, f.path) for f in touched])
+            tdf = self._read_files(spark, touched)
             from pyspark.sql import Window
             # allowMissingColumns = schema evolution: an update batch
             # may add columns (old rows read back NULL) or omit ones
@@ -354,8 +326,7 @@ class TxnTable:
                 untouched.append(f)
         new_files: list[FileEntry] = []
         if touched:
-            tdf = spark.read.parquet(
-                *[os.path.join(self.root, f.path) for f in touched])
+            tdf = self._read_files(spark, touched)
             kept = tdf.join(F.broadcast(kdf), key, "left_anti")
             new_files = self._write_files(kept, scols)
             new_files = [f for f in new_files if f.rows > 0]
@@ -395,8 +366,7 @@ class TxnTable:
              else untouched).append(f)
 
         if touched:
-            tdf = spark.read.parquet(
-                *[os.path.join(self.root, f.path) for f in touched])
+            tdf = self._read_files(spark, touched)
             combined = (
                 tdf.unionByName(partials)
                 .groupBy(*key_cols)
@@ -429,8 +399,9 @@ class TxnTable:
 
         def _read(paths: list[str], schema_of: DataFrame | None):
             if paths:
-                return spark.read.option("mergeSchema", "true").parquet(
-                    *[os.path.join(self.root, p) for p in paths])
+                return footers.read_parquet(
+                    spark, *[os.path.join(self.root, p) for p in paths],
+                    merge_schema=True)
             assert schema_of is not None
             return schema_of.limit(0)
 
@@ -474,8 +445,7 @@ class TxnTable:
         keep = [f for f in files if f.rows >= target_rows]
         if len(small) <= 1:
             return base  # nothing to bin-pack
-        df = spark.read.option("mergeSchema", "true").parquet(
-            *[os.path.join(self.root, f.path) for f in small])
+        df = self._read_files(spark, small, merge_schema=True)
         n_out = max(1, -(-sum(f.rows for f in small) // target_rows))
         packed = (df.repartitionByRange(n_out, stat_cols[0])
                   if stat_cols else df.repartition(n_out))
@@ -504,6 +474,60 @@ class TxnTable:
                         removed.append(d)
             os.unlink(self._manifest_path(v))
         return removed
+
+
+def _footer_file_stats(abs_dir: str, stat_cols: tuple[str, ...]
+                       ) -> list[tuple[str, int, dict]] | None:
+    """(file name, rows, stats) per written file, from the footers;
+    None when any footer cannot give them exactly."""
+    files = footers.part_files(abs_dir)
+    if files is None:
+        return None
+    out = []
+    for path in files:
+        got = footers.file_stats(path, stat_cols)
+        if got is None:
+            return None
+        out.append((os.path.basename(path), *got))
+    return out
+
+
+def _spark_file_stats(spark: SparkSession, abs_dir: str,
+                      stat_cols: tuple[str, ...]
+                      ) -> list[tuple[str, int, dict]]:
+    """(file name, rows, stats) per non-empty written file, from one
+    Spark aggregation grouped by ``input_file_name()``."""
+    aggs = [F.count(F.lit(1)).alias("_rows")]
+    for c in stat_cols:
+        aggs.append(F.min(c).alias(f"_min_{c}"))
+        aggs.append(F.max(c).alias(f"_max_{c}"))
+    per_file = (
+        footers.read_parquet(spark, abs_dir)
+        .groupBy(F.input_file_name().alias("_file"))
+        .agg(*aggs).collect()
+    )
+    return [
+        (os.path.basename(r["_file"].split("://")[-1]), r["_rows"],
+         {c: {"min": _json_safe(r[f"_min_{c}"]),
+              "max": _json_safe(r[f"_max_{c}"])}
+          for c in stat_cols})
+        for r in per_file
+    ]
+
+
+def _manifest_entries(commit_dir: str, abs_dir: str,
+                      per_file: list[tuple[str, int, dict]]
+                      ) -> list[FileEntry]:
+    """Manifest entries for a commit's non-empty files. A zero-row
+    commit keeps its (empty) part files, without stats, so the
+    snapshot still carries the schema."""
+    entries = [FileEntry(os.path.join(commit_dir, name), rows, stats)
+               for name, rows, stats in per_file if rows]
+    if not entries:
+        entries = [FileEntry(os.path.join(commit_dir, name), 0, {})
+                   for name in sorted(os.listdir(abs_dir))
+                   if name.endswith(".parquet")]
+    return entries
 
 
 def _json_safe(v: Any) -> Any:

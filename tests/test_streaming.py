@@ -402,3 +402,29 @@ def test_registered_stream_session_window_matches_batch_builtin(spark):
         for r in events_session_window_builtin(spark, SF_SMOKE).collect()
     }
     assert got == want and got
+
+
+def test_flushed_landing_zone_copies_when_hard_links_fail(spark, monkeypatch):
+    """Scratch dirs on filesystems that refuse hard links between them
+    (EXDEV across mounts, EPERM/ENOTSUP on some overlay and network
+    mounts): the flushed zone falls back to copying the part files and
+    still holds the shared zone's rows plus the one flush event."""
+    import errno
+    import glob
+    import os
+
+    from sql_data_warehouse_spark.analytics import streaming_live as sl
+
+    def no_link(src, dst):
+        raise OSError(errno.EXDEV, "Invalid cross-device link")
+
+    src = sl._landing_zone(spark, SF_SMOKE)
+    monkeypatch.setattr(spark, "_wh_flush_zones", {}, raising=False)
+    monkeypatch.setattr(os, "link", no_link)
+    path = sl._flushed_landing_zone(spark, SF_SMOKE)
+    copied = [os.path.join(path, os.path.basename(f))
+              for f in glob.glob(f"{src}/*.parquet")]
+    assert copied and all(os.stat(f).st_nlink == 1 for f in copied)
+    flushed = spark.read.parquet(path)
+    assert flushed.count() == spark.read.parquet(src).count() + 1
+    assert flushed.filter(F.col("user_id") == FLUSH_USER).count() == 1

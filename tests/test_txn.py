@@ -3,11 +3,14 @@
 import os
 import shutil
 import tempfile
+import uuid
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
+from sql_data_warehouse_spark.sources import footers
+from sql_data_warehouse_spark.sources import txn as txn_mod
 from sql_data_warehouse_spark.sources.txn import (
     CommitConflict, TxnTable,
 )
@@ -406,3 +409,159 @@ def test_concurrent_writers_retry_to_serializable(spark, root):
     n_commits = 1 + n_writers * n_rounds
     assert tbl.versions() == list(range(1, n_commits + 1))
     assert all(h["op"] == "merge_additive" for h in tbl.history())
+
+
+# ------------------------------------------- footer-built bookkeeping
+
+def _assemble(commit_dir, frames):
+    """One commit directory holding the part files of several
+    separately written frames (each written as a single file)."""
+    os.makedirs(commit_dir)
+    for i, df in enumerate(frames):
+        tmp = f"{commit_dir}_w{i}"
+        df.coalesce(1).write.parquet(tmp)
+        for name in os.listdir(tmp):
+            if name.endswith(".parquet"):
+                os.rename(os.path.join(tmp, name),
+                          os.path.join(commit_dir, f"w{i}-{name}"))
+        shutil.rmtree(tmp)
+
+
+def _entries_both_ways(spark, root, commit, cols):
+    abs_dir = os.path.join(root, commit)
+    footer = txn_mod._footer_file_stats(abs_dir, cols)
+    assert footer is not None, "integer stats must come from the footers"
+    via_spark = txn_mod._spark_file_stats(spark, abs_dir, cols)
+
+    def entries(per_file):
+        return sorted(txn_mod._manifest_entries(commit, abs_dir, per_file),
+                      key=lambda e: e.path)
+
+    return entries(footer), entries(via_spark)
+
+
+@pytest.mark.parametrize("ktype", ["int", "bigint"])
+def test_footer_entries_equal_spark_aggregation(spark, root, ktype):
+    schema = f"k {ktype}, v string"
+    rows = spark.createDataFrame(
+        [(i if i % 4 else None, f"v{i}") for i in range(1, 30)], schema)
+    frames = [
+        rows,
+        spark.createDataFrame([(None, "a"), (None, "b")], schema),  # all-NULL keys
+        spark.createDataFrame([], schema),                          # 0-row part file
+        spark.createDataFrame([(-(2 ** 31), "lo"), (2 ** 31 - 1, "hi")], schema),
+    ]
+    _assemble(os.path.join(root, "mixed"), frames)
+    footer, via_spark = _entries_both_ways(spark, root, "mixed", ("k",))
+    assert footer == via_spark
+    assert len(footer) == 3  # the 0-row file is not listed
+    assert {"min": None, "max": None} in [e.stats["k"] for e in footer]
+
+    # all-empty commit: every (empty) part file is kept, without stats
+    _assemble(os.path.join(root, "empty"),
+              [spark.createDataFrame([], schema)] * 2)
+    footer, via_spark = _entries_both_ways(spark, root, "empty", ("k",))
+    assert footer == via_spark
+    assert len(footer) == 2 and all(e.rows == 0 and e.stats == {}
+                                    for e in footer)
+
+
+def test_footer_stats_span_row_groups(spark, root):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    keys = list(range(50, 60)) + [None] * 10 + list(range(-5, 5)) + [7, None]
+    path = os.path.join(root, "groups.parquet")
+    pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), path,
+                   row_group_size=10)
+    assert pq.ParquetFile(path).metadata.num_row_groups == 4
+    r = spark.read.parquet(path).agg(
+        F.count(F.lit(1)).alias("n"), F.min("k").alias("lo"),
+        F.max("k").alias("hi")).collect()[0]
+    assert footers.file_stats(path, ("k",)) == (
+        r["n"], {"k": {"min": r["lo"], "max": r["hi"]}})
+    # a footer without stats cannot answer: the Spark path takes over
+    bare = os.path.join(root, "bare.parquet")
+    pq.write_table(pa.table({"k": pa.array(keys, pa.int64())}), bare,
+                   write_statistics=False)
+    assert footers.file_stats(bare, ("k",)) is None
+    assert footers.file_stats(bare, ()) == (len(keys), {})
+
+
+def test_string_and_timestamp_stats_take_spark_path(spark, root):
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [Row(k=i, s=f"s{i:03d}", ts=dt.datetime(2024, 1, 1, i % 24))
+         for i in range(50)]).repartition(3)
+    tbl = TxnTable(root)
+    tbl.overwrite(df, stat_cols=("k", "s", "ts"))
+    abs_dir = os.path.join(root, os.path.dirname(tbl._files(1)[0].path))
+    for col in ("s", "ts"):
+        assert txn_mod._footer_file_stats(abs_dir, (col,)) is None
+    # the manifest holds what the Spark aggregation returns
+    got = {(f.rows, f.stats["s"]["min"], f.stats["ts"]["max"])
+           for f in tbl._files(1)}
+    per_file = txn_mod._spark_file_stats(spark, abs_dir, ("s", "ts"))
+    want = {(rows, st["s"]["min"], st["ts"]["max"])
+            for _, rows, st in per_file}
+    assert got == want
+    assert all(isinstance(ts, str) for _, _, ts in got)  # ISO strings
+
+
+def test_footer_schema_reads_match_inference(spark, root):
+    import datetime as dt
+
+    df = spark.createDataFrame(
+        [Row(k=i, v=f"v{i}", ts=dt.datetime(2024, 1, 1, i % 24),
+             d=dt.date(2024, 2, 1 + i % 28), x=i / 3, arr=[i, i + 1])
+         for i in range(40)]).repartition(4)
+    tbl = TxnTable(root)
+    tbl.overwrite(df, stat_cols=("k",))
+    files = [os.path.join(root, f.path) for f in tbl._files(1)]
+    assert len(files) > 1 and footers.spark_schema(files) is not None
+    inferred = spark.read.option("mergeSchema", "true").parquet(*files)
+    for got in (tbl.read(spark), footers.read_parquet(spark, *files),
+                footers.read_parquet(spark, os.path.dirname(files[0]))):
+        assert got.schema == inferred.schema
+        assert _rows(got) == _rows(inferred)
+    pruned = tbl.read(spark, prune=("k", 1000, 2000))
+    assert pruned.schema == inferred.schema and pruned.count() == 0
+
+
+def test_schema_evolved_snapshot_still_merges_schemas(spark, root):
+    tbl = TxnTable(root)
+    tbl.overwrite(
+        spark.createDataFrame([Row(k=i, v=f"x{i}") for i in range(10)])
+        .repartitionByRange(2, "k"), stat_cols=("k",))
+    tbl.merge(spark.createDataFrame([Row(k=1, v="new", w=42)]), key="k")
+    files = [os.path.join(root, f.path) for f in tbl._files(2)]
+    assert footers.spark_schema(files) is None  # footers differ
+    inferred = spark.read.option("mergeSchema", "true").parquet(*files)
+    got = tbl.read(spark)
+    assert got.schema == inferred.schema
+    assert set(got.columns) == {"k", "v", "w"}
+    assert _rows(got.select("k", "v")) == _rows(inferred.select("k", "v"))
+
+
+def _jobs_in_group(spark, fn):
+    sc = spark.sparkContext
+    group = f"txn-test-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_int_key_overwrite_runs_no_job_after_the_write(spark, root):
+    df = spark.createDataFrame([Row(k=i, v=f"v{i}") for i in range(100)])
+    write_jobs = _jobs_in_group(
+        spark, lambda: df.write.parquet(os.path.join(root, "plain")))
+    overwrite_jobs = _jobs_in_group(
+        spark, lambda: TxnTable(os.path.join(root, "t")).overwrite(
+            df, stat_cols=("k",)))
+    assert write_jobs >= 1
+    assert overwrite_jobs == write_jobs
